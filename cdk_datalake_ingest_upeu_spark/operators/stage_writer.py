@@ -15,7 +15,15 @@ Scale design notes (100 TB):
 - With partition columns declared, only the partitions present in the
   source batch are rewritten (dynamic partition overwrite), so a
   micro-batch touching 1 hour of a year-partitioned table rewrites 1
-  partition, not 100 TB.
+  partition, not 100 TB. The merged rows are written ONCE, straight
+  onto the table path: a dynamic overwrite stages its files under
+  ``.spark-staging-*`` and swaps partitions in only at job commit,
+  after every task has read its input, so the job may read the
+  partitions it replaces. A MERGE reads the target once (that read
+  doubles as the existence probe) and computes the source once.
+- Unpartitioned tables (and the full-table rewrites of delete/compact)
+  are static overwrites, which delete the target before the job runs;
+  those still stage the result in a sibling directory first.
 - The latest-row dedup window (reference W1) shuffles once on the ID
   keys; the subsequent MERGE join reuses the same key, so AQE's local
   shuffle reader avoids a second full exchange.
@@ -27,6 +35,7 @@ import os
 import shutil
 import uuid
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -37,6 +46,10 @@ try:  # pragma: no cover - exercised only when delta-spark is installed
 except Exception:  # pragma: no cover
     DeltaTable = None
     _HAS_DELTA = False
+
+# the read errors that mean "no table here yet": a missing path, or a
+# directory with no data file to infer a schema from
+_ABSENT_CONDITIONS = frozenset({"PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"})
 
 
 def dedup_latest(df: DataFrame, id_columns: list[str], date_columns: list[str]) -> DataFrame:
@@ -134,23 +147,36 @@ class StageTable:
     def exists(self) -> bool:
         if self.fmt == "delta" and _HAS_DELTA:
             return DeltaTable.isDeltaTable(self.spark, self.path)
-        try:
-            self.spark.read.format(self.fmt).load(self.path).schema
-            return True
-        except Exception:
-            return False
+        return self._read_existing() is not None
 
     def read(self) -> DataFrame:
         return self.spark.read.format(self.fmt).load(self.path)
 
+    def _read_existing(self) -> DataFrame | None:
+        """:meth:`read`, or None when there is no table yet (a missing
+        path or an empty directory). Any other read error propagates:
+        taking a transient I/O error for "absent" would make
+        :meth:`merge` overwrite the table's history with one batch."""
+        try:
+            return self.read()
+        except AnalysisException as exc:
+            if exc.getCondition() in _ABSENT_CONDITIONS:
+                return None
+            raise
+
     def overwrite(self, df: DataFrame) -> None:
+        self._write(df)
+
+    def _write(self, df: DataFrame, **options: str) -> None:
+        """Overwrite-mode write onto the table path with the given writer
+        options, then refresh the Bloom index."""
         if self.partition_columns:
             # shuffle rows to their target partition first: without this,
             # every write task emits a file into every partition dir
             # (tasks x partitions small files); with it, each partition
             # gets as few files as the writing tasks that own it
             df = df.repartition(*[F.col(c) for c in self.partition_columns])
-        writer = df.write.format(self.fmt).mode("overwrite")
+        writer = df.write.format(self.fmt).mode("overwrite").options(**options)
         if self.partition_columns:
             writer = writer.partitionBy(*self.partition_columns)
         writer.save(self.path)
@@ -204,16 +230,20 @@ class StageTable:
         *,
         evolve_schema: bool = False,
     ) -> None:
-        """Delta-style MERGE upsert of ``source`` into this table.
+        """Delta-style MERGE upsert of ``source`` into this table; a
+        missing table is created from ``source`` by :meth:`overwrite`.
 
         ``evolve_schema=True`` lets source-added columns widen the table
         schema (existing rows null-backfilled), mirroring Delta's
         ``schema.autoMerge``; the parquet path rewrites with the widened
-        schema, which the MERGE rewrite pays for anyway."""
-        if not self.exists():
-            self.overwrite(source)
-            return
+        schema, which the MERGE rewrite pays for anyway.
+
+        The parquet path reads the target once — that read is also the
+        existence probe — and writes once; see :meth:`_merge_parquet`."""
         if self.fmt == "delta" and _HAS_DELTA:  # pragma: no cover
+            if not self.exists():
+                self.overwrite(source)
+                return
             if evolve_schema:
                 self.spark.conf.set(
                     "spark.databricks.delta.schema.autoMerge.enabled", "true"
@@ -228,21 +258,45 @@ class StageTable:
                 .execute()
             )
             return
+        target = self._read_existing()
+        if target is None:
+            self.overwrite(source)
+            return
         self._merge_parquet(
-            source.dropDuplicates(), key_columns, evolve_schema=evolve_schema
+            target, source.dropDuplicates(), key_columns, evolve_schema=evolve_schema
         )
 
     def _merge_parquet(
         self,
+        target: DataFrame,
         source: DataFrame,
         key_columns: list[str],
         *,
         evolve_schema: bool = False,
     ) -> None:
-        target = self.read()
-        if self.partition_columns:
-            # Rewrite only the partitions the batch touches: restrict the
-            # anti-join to affected partitions and dynamic-overwrite them.
+        """Upsert ``source`` into ``target``, this table as already read.
+
+        Partitioned tables rewrite only the partitions the batch touches,
+        in ONE write straight onto the table path: the merged rows of
+        those partitions, shuffled by the partition columns (the
+        :meth:`overwrite` file policy), under a dynamic partition
+        overwrite. The job reads the partitions it replaces, which is
+        safe because Spark writes them under ``.spark-staging-*`` and
+        swaps them in only at job commit, after every task has read its
+        input; a failed job leaves the table as it was. The source is
+        persisted because the partition-value collect and the write both
+        consume it.
+
+        Unpartitioned tables are rewritten whole by a static overwrite,
+        which needs the staged copy of :meth:`_checkpointed_overwrite`.
+        """
+        if not self.partition_columns:
+            self._checkpointed_overwrite(
+                merge_upsert(target, source, key_columns, evolve_schema=evolve_schema)
+            )
+            return
+        source = source.persist()
+        try:
             parts = [
                 r.asDict()
                 for r in source.select(*self.partition_columns).distinct().collect()
@@ -256,36 +310,37 @@ class StageTable:
                     t = F.col(c).eqNullSafe(F.lit(v))
                     term = t if term is None else (term & t)
                 pred = term if pred is None else (pred | term)
-            affected_target = target.filter(pred)
             merged = merge_upsert(
-                affected_target, source, key_columns, evolve_schema=evolve_schema
+                target.filter(pred), source, key_columns, evolve_schema=evolve_schema
             )
-            self._checkpointed_overwrite(merged, dynamic=True)
-        else:
-            merged = merge_upsert(
-                target, source, key_columns, evolve_schema=evolve_schema
-            )
-            self._checkpointed_overwrite(merged, dynamic=False)
+            self._write(merged, partitionOverwriteMode="dynamic")
+        finally:
+            source.unpersist()
 
-    def _checkpointed_overwrite(self, df: DataFrame, *, dynamic: bool) -> None:
-        """Write a result that reads from ``self.path`` back onto it.
+    def _checkpointed_overwrite(self, df: DataFrame) -> None:
+        """Statically overwrite the table with a result that reads from it.
 
-        Spark can't overwrite a path it is reading from in the same job,
-        so stage to a sibling temp dir first, then re-read + write. On
-        local/HDFS this is two sequential jobs; with Delta installed the
-        MERGE path above replaces this entirely.
+        A static overwrite deletes the table's files before its job runs,
+        so a job reading the table would lose its input (and the table
+        its data). The result is therefore staged in a sibling temp dir
+        first, then re-read and written onto the table path: two
+        sequential jobs. The mode is set to static explicitly, whatever
+        the session default, so partitions the result no longer holds
+        disappear. Only the partitioned MERGE, a dynamic overwrite, writes
+        once (:meth:`_merge_parquet`); with Delta installed the MERGE path
+        replaces this entirely.
         """
         tmp = f"{self.path}__tmp_{uuid.uuid4().hex[:8]}"
         try:
             (df.write.format(self.fmt).mode("overwrite").save(tmp))
             staged = self.spark.read.format(self.fmt).load(tmp)
-            writer = staged.write.format(self.fmt)
+            writer = (
+                staged.write.format(self.fmt)
+                .mode("overwrite")
+                .option("partitionOverwriteMode", "static")
+            )
             if self.partition_columns:
                 writer = writer.partitionBy(*self.partition_columns)
-            if dynamic:
-                writer = writer.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-            else:
-                writer = writer.mode("overwrite")
             writer.save(self.path)
             self._refresh_bloom_index()
         finally:
@@ -389,7 +444,7 @@ class StageTable:
             return self._bloom_bounded_delete(deletes, key_columns[0])
         # AQE picks broadcast for the (typically tiny) delete set
         kept = self.read().join(deletes, key_columns, "left_anti")
-        self._checkpointed_overwrite(kept, dynamic=False)
+        self._checkpointed_overwrite(kept)
         return -1
 
     @staticmethod
@@ -505,7 +560,7 @@ class StageTable:
         # driver-side metadata, never a df.rdd materialization of the
         # analyzed plan just to read a partition count
         n = target_partitions or max(1, len(df.inputFiles()) // 4)
-        self._checkpointed_overwrite(df.coalesce(n), dynamic=False)
+        self._checkpointed_overwrite(df.coalesce(n))
 
     def drop_partitions(self, column: str, *, before: str) -> int:
         """Partition-level retention (TTL): remove every partition of

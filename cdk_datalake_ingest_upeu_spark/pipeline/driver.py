@@ -216,12 +216,10 @@ class TableProcessor:
             # upsert is the only semantics that preserves older rows (the
             # reference's stage writer, light_transform.py:1554, merges
             # only incremental/between-date — overwriting a days_off
-            # table with a 10-day slice would drop its history)
-            if (
-                stage.exists()
-                and spec.load_type in ("incremental", "between-date", "days_off")
-                and id_cols
-            ):
+            # table with a 10-day slice would drop its history). merge
+            # creates a missing table itself, so neither branch has to
+            # look at the stage first.
+            if spec.load_type in ("incremental", "between-date", "days_off") and id_cols:
                 stage.merge(final, id_cols)
             else:
                 stage.overwrite(final)

@@ -1,5 +1,6 @@
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from cdk_datalake_ingest_upeu_spark.operators.stage_writer import (
@@ -32,6 +33,18 @@ def test_merge_upsert_semantics(spark):
     assert out == {1: "a", 2: "B", 3: "c", 4: "D"}
 
 
+def _data_files(path):
+    """relative path -> mtime (ns) of every parquet data file under path"""
+    return {
+        os.path.relpath(os.path.join(root, f), path): os.stat(
+            os.path.join(root, f)
+        ).st_mtime_ns
+        for root, _dirs, files in os.walk(path)
+        for f in files
+        if f.endswith(".parquet")
+    }
+
+
 def test_stage_table_overwrite_and_merge(spark, tmp_path):
     path = os.path.join(tmp_path, "tbl")
     stage = StageTable(spark, path)
@@ -42,31 +55,111 @@ def test_stage_table_overwrite_and_merge(spark, tmp_path):
     assert stage.exists()
     assert stage.read().count() == 2
 
-    batch = spark.createDataFrame([(2, "B"), (3, "C")], "id int, v string")
+    # unpartitioned: a static rewrite through the staged copy; exact
+    # duplicate source rows collapse to one
+    batch = spark.createDataFrame(
+        [(2, "B"), (3, "C"), (3, "C")], "id int, v string"
+    )
     stage.merge(batch, ["id"])
-    out = {r.id: r.v for r in stage.read().collect()}
-    assert out == {1: "a", 2: "B", 3: "C"}
+    out = sorted((r.id, r.v) for r in stage.read().collect())
+    assert out == [(1, "a"), (2, "B"), (3, "C")]
+    assert os.listdir(tmp_path) == ["tbl"]  # staged copy removed
 
 
 def test_stage_table_partitioned_merge_rewrites_only_touched(spark, tmp_path):
     path = os.path.join(tmp_path, "ptbl")
     stage = StageTable(spark, path, partition_columns=["dt"])
     t0 = spark.createDataFrame(
-        [(1, "a", "d1"), (2, "b", "d1"), (3, "c", "d2")], "id int, v string, dt string"
+        [(1, "a", "d1"), (2, "b", "d1"), (3, "c", "d2"), (4, "d", "d3")],
+        "id int, v string, dt string",
     )
     stage.overwrite(t0)
-    # batch touches only partition d1
-    batch = spark.createDataFrame([(2, "B", "d1"), (9, "X", "d1")], "id int, v string, dt string")
+    before = _data_files(path)
+    # the batch touches d1 (late updates to an older partition, one
+    # sent twice verbatim) and a new partition d4; d2 and d3 are untouched
+    batch = spark.createDataFrame(
+        [
+            (2, "B", "d1"),
+            (2, "B", "d1"),
+            (9, "X", "d1"),
+            (5, "e", "d4"),
+            (6, "f", "d4"),
+        ],
+        "id int, v string, dt string",
+    )
     stage.merge(batch, ["id"])
-    out = {r.id: (r.v, r.dt) for r in stage.read().collect()}
-    assert out == {1: ("a", "d1"), 2: ("B", "d1"), 9: ("X", "d1"), 3: ("c", "d2")}
+    out = sorted((r.id, r.v, r.dt) for r in stage.read().collect())
+    assert out == [
+        (1, "a", "d1"),
+        (2, "B", "d1"),
+        (3, "c", "d2"),
+        (4, "d", "d3"),
+        (5, "e", "d4"),
+        (6, "f", "d4"),
+        (9, "X", "d1"),
+    ]
+    after = _data_files(path)
+    untouched = {f: m for f, m in before.items() if not f.startswith("dt=d1")}
+    assert untouched and all(after.get(f) == m for f, m in untouched.items())
+    # written once, straight onto the table: no staged sibling, and one
+    # file per rewritten partition
+    assert os.listdir(tmp_path) == ["ptbl"]
+    for part in ("dt=d1", "dt=d4"):
+        written = [f for f in after if f.startswith(part + os.sep)]
+        assert len(written) == 1, (part, written)
+        assert written[0] not in before
 
 
 def test_stage_table_merge_on_missing_table_creates(spark, tmp_path):
-    path = os.path.join(tmp_path, "fresh")
-    stage = StageTable(spark, path)
-    stage.merge(spark.createDataFrame([(1, "a")], "id int, v string"), ["id"])
-    assert stage.read().count() == 1
+    # a missing path and an empty directory both read as "no table yet"
+    empty = os.path.join(tmp_path, "empty")
+    os.makedirs(empty)
+    for path in (os.path.join(tmp_path, "fresh"), empty):
+        stage = StageTable(spark, path)
+        assert not stage.exists()
+        stage.merge(spark.createDataFrame([(1, "a")], "id int, v string"), ["id"])
+        assert stage.read().count() == 1
+
+
+def test_merge_propagates_read_errors_and_keeps_table(spark, tmp_path, monkeypatch):
+    """Only a missing or empty table reads as absent. Any other read
+    error must fail the MERGE, not turn it into an overwrite that
+    replaces the table's history with one batch."""
+    path = os.path.join(tmp_path, "kept")
+    stage = StageTable(spark, path, partition_columns=["dt"])
+    stage.overwrite(
+        spark.createDataFrame([(1, "a", "d1"), (2, "b", "d2")], "id int, v string, dt string")
+    )
+    before = _data_files(path)
+
+    def failing_read():
+        raise OSError("Input/output error")
+
+    monkeypatch.setattr(stage, "read", failing_read)
+    with pytest.raises(OSError):
+        stage.exists()
+    with pytest.raises(OSError):
+        stage.merge(
+            spark.createDataFrame([(3, "c", "d3")], "id int, v string, dt string"), ["id"]
+        )
+    assert _data_files(path) == before
+
+
+def test_delete_keys_drops_emptied_partitions(spark, tmp_path):
+    """The full-table delete rewrite is a static overwrite even when the
+    session defaults to dynamic: a partition whose every row is deleted
+    disappears instead of keeping its old files."""
+    assert spark.conf.get("spark.sql.sources.partitionOverwriteMode") == "dynamic"
+    path = os.path.join(tmp_path, "del")
+    stage = StageTable(spark, path, partition_columns=["dt"])
+    stage.overwrite(
+        spark.createDataFrame(
+            [(1, "a", "d1"), (2, "b", "d2"), (3, "c", "d2")], "id int, v string, dt string"
+        )
+    )
+    assert stage.delete_keys(spark.createDataFrame([(1,)], "id int"), ["id"]) == -1
+    assert sorted(r.id for r in stage.read().collect()) == [2, 3]
+    assert not os.path.exists(os.path.join(path, "dt=d1"))
 
 
 def test_write_empty_preserves_schema(spark, tmp_path):
