@@ -3,27 +3,35 @@
 Re-implements the reference's Delta stage zone (write/MERGE/dedup/
 maintenance — ``light_transform.py:1363-1409,1534-1564,1786-1803``) as a
 Spark-native managed Parquet table, because the runtime image carries no
-Delta jars. When ``delta-spark`` IS importable the same class delegates
-to real ``DeltaTable.merge`` (the reference's S10).
+Delta jars.
 
 Scale design notes (100 TB):
 
+- Every change to a table, and to its Bloom index, takes one path,
+  :func:`_replace_files`: list the data files, append the new ones in one
+  Spark job, list again, then unlink the files they replace. What differs
+  between operations is only which files are replaced: all of them (full
+  load, unpartitioned MERGE, full-table delete, compaction, index
+  writes), the ones in the partition directories the write added to
+  (partitioned MERGE), or an explicit list (the Bloom-bounded delete).
+- The job may read the files it replaces: its input is listed when the
+  plan is built, and nothing is unlinked until the job commits. Spark's
+  default (v1) file committer moves the new files into the table only at
+  job commit, so a failed write leaves the table as it was. Between the
+  commit and the unlinks a reader can see both file sets. A log commit
+  between the append and the unlinks would close that window; it would
+  go in :func:`_replace_files` alone.
 - MERGE is expressed as *join-based upsert*: ``target LEFT ANTI JOIN
   source ON keys`` ∪ ``source``. Catalyst plans the anti-join
   (broadcast when the source micro-batch is small — the common
   incremental case — else sort-merge with AQE skew handling).
 - With partition columns declared, only the partitions present in the
-  source batch are rewritten (dynamic partition overwrite), so a
-  micro-batch touching 1 hour of a year-partitioned table rewrites 1
-  partition, not 100 TB. The merged rows are written ONCE, straight
-  onto the table path: a dynamic overwrite stages its files under
-  ``.spark-staging-*`` and swaps partitions in only at job commit,
-  after every task has read its input, so the job may read the
-  partitions it replaces. A MERGE reads the target once (that read
-  doubles as the existence probe) and computes the source once.
-- Unpartitioned tables (and the full-table rewrites of delete/compact)
-  are static overwrites, which delete the target before the job runs;
-  those still stage the result in a sibling directory first.
+  source batch are rewritten, so a micro-batch touching 1 hour of a
+  year-partitioned table rewrites 1 partition, not 100 TB. A MERGE
+  reads the target once (that read doubles as the existence probe),
+  computes the source once and writes the merged rows once.
+- The file listings walk the table on the driver: O(files) metadata,
+  no Spark job.
 - The latest-row dedup window (reference W1) shuffles once on the ID
   keys; the subsequent MERGE join reuses the same key, so AQE's local
   shuffle reader avoids a second full exchange.
@@ -33,23 +41,71 @@ from __future__ import annotations
 
 import os
 import shutil
-import uuid
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-try:  # pragma: no cover - exercised only when delta-spark is installed
-    from delta.tables import DeltaTable
-
-    _HAS_DELTA = True
-except Exception:  # pragma: no cover
-    DeltaTable = None
-    _HAS_DELTA = False
-
 # the read errors that mean "no table here yet": a missing path, or a
 # directory with no data file to infer a schema from
 _ABSENT_CONDITIONS = frozenset({"PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"})
+
+
+def _visible(name: str) -> bool:
+    """Whether Spark's file index lists ``name``: it skips ``.``- and
+    ``_``-prefixed names (``_SUCCESS``, ``_temporary``, checksums) except
+    a ``_``-prefixed partition directory such as ``_k=1``."""
+    return not name.startswith(".") and (not name.startswith("_") or "=" in name)
+
+
+def _list_data_files(root: str) -> set[str]:
+    found = set()
+    for dirpath, dirs, files in os.walk(root):
+        dirs[:] = [d for d in dirs if _visible(d)]
+        found.update(os.path.join(dirpath, f) for f in files if _visible(f))
+    return found
+
+
+def _every_file(before: set[str], added: set[str]) -> set[str]:
+    return before
+
+
+def _touched_partitions(before: set[str], added: set[str]) -> set[str]:
+    dirs = {os.path.dirname(f) for f in added}
+    return {f for f in before if os.path.dirname(f) in dirs}
+
+
+def _replace_files(df: DataFrame, root: str, partition_columns: list[str], remove) -> set[str]:
+    """The one write of a stage table or Bloom index: append ``df`` under
+    ``root`` in one Spark job, then unlink ``remove(before, added)`` —
+    a subset of the data files listed before the write, chosen with the
+    files the write added — with their checksums, and remove the
+    partition directories that leaves empty. Returns the added files.
+
+    Partitioned writes shuffle rows to their partition first: without
+    this, every write task emits a file into every partition directory
+    (tasks x partitions small files); with it, each partition gets as
+    few files as the tasks that own it."""
+    root = os.path.abspath(root)
+    before = _list_data_files(root)
+    if partition_columns:
+        df = df.repartition(*[F.col(c) for c in partition_columns])
+    writer = df.write.mode("append")
+    if partition_columns:
+        writer = writer.partitionBy(*partition_columns)
+    writer.parquet(root)
+    added = _list_data_files(root) - before
+    removed = remove(before, added)
+    for f in removed:
+        crc = os.path.join(os.path.dirname(f), f".{os.path.basename(f)}.crc")
+        for p in (f, crc):
+            if os.path.exists(p):
+                os.remove(p)
+    for d in sorted({os.path.dirname(f) for f in removed}, key=len, reverse=True):
+        while d.startswith(root + os.sep) and os.path.isdir(d) and not os.listdir(d):
+            os.rmdir(d)
+            d = os.path.dirname(d)
+    return added
 
 
 def dedup_latest(df: DataFrame, id_columns: list[str], date_columns: list[str]) -> DataFrame:
@@ -115,7 +171,6 @@ class StageTable:
         spark: SparkSession,
         path: str,
         partition_columns: list[str] | None = None,
-        fmt: str | None = None,
         bloom_index_keys: list[str] | None = None,
         bloom_index_dir: str | None = None,
     ):
@@ -126,31 +181,22 @@ class StageTable:
         (default ``<path>__bloom/<key>``), and :meth:`lookup` prunes a
         point lookup through it — file skipping on unclustered
         high-cardinality keys, the capability Delta file stats provide,
-        kept consistent by the writer itself. Parquet-format tables
-        only (Delta carries its own file stats)."""
+        kept consistent by the writer itself."""
         self.spark = spark
         self.path = os.fspath(path)
         self.partition_columns = partition_columns or []
-        self.fmt = fmt or ("delta" if _HAS_DELTA else "parquet")
         self.bloom_index_keys = list(bloom_index_keys or [])
         self.bloom_index_dir = (
             os.fspath(bloom_index_dir) if bloom_index_dir else self.path + "__bloom"
         )
-        if self.bloom_index_keys and self.fmt != "parquet":
-            raise ValueError(
-                "bloom_index_keys is parquet-only (Delta tables carry "
-                "their own per-file stats)"
-            )
 
     # -- basic IO ----------------------------------------------------------
 
     def exists(self) -> bool:
-        if self.fmt == "delta" and _HAS_DELTA:
-            return DeltaTable.isDeltaTable(self.spark, self.path)
         return self._read_existing() is not None
 
     def read(self) -> DataFrame:
-        return self.spark.read.format(self.fmt).load(self.path)
+        return self.spark.read.parquet(self.path)
 
     def _read_existing(self) -> DataFrame | None:
         """:meth:`read`, or None when there is no table yet (a missing
@@ -165,21 +211,15 @@ class StageTable:
             raise
 
     def overwrite(self, df: DataFrame) -> None:
-        self._write(df)
+        """Replace the whole table with ``df``: partitions ``df`` lacks
+        disappear (a full load replaces the table, as the reference's
+        Delta overwrite does)."""
+        self._replace(df)
 
-    def _write(self, df: DataFrame, **options: str) -> None:
-        """Overwrite-mode write onto the table path with the given writer
-        options, then refresh the Bloom index."""
-        if self.partition_columns:
-            # shuffle rows to their target partition first: without this,
-            # every write task emits a file into every partition dir
-            # (tasks x partitions small files); with it, each partition
-            # gets as few files as the writing tasks that own it
-            df = df.repartition(*[F.col(c) for c in self.partition_columns])
-        writer = df.write.format(self.fmt).mode("overwrite").options(**options)
-        if self.partition_columns:
-            writer = writer.partitionBy(*self.partition_columns)
-        writer.save(self.path)
+    def _replace(self, df: DataFrame, remove=_every_file) -> None:
+        """Write ``df`` onto the table through :func:`_replace_files`,
+        then refresh the Bloom index."""
+        _replace_files(df, self.path, self.partition_columns, remove)
         self._refresh_bloom_index()
 
     def _refresh_bloom_index(self) -> None:
@@ -196,9 +236,12 @@ class StageTable:
         )
 
         for key in self.bloom_index_keys:
-            build_file_bloom_index(self.spark, self.path, key).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(self.bloom_index_dir, key))
+            _replace_files(
+                build_file_bloom_index(self.spark, self.path, key),
+                os.path.join(self.bloom_index_dir, key),
+                [],
+                _every_file,
+            )
 
     def lookup(self, values_df: DataFrame, key: str):
         """Point lookup pruned through this table's Bloom index: returns
@@ -235,63 +278,22 @@ class StageTable:
 
         ``evolve_schema=True`` lets source-added columns widen the table
         schema (existing rows null-backfilled), mirroring Delta's
-        ``schema.autoMerge``; the parquet path rewrites with the widened
-        schema, which the MERGE rewrite pays for anyway.
+        ``schema.autoMerge``; the MERGE rewrite absorbs the widening.
 
-        The parquet path reads the target once — that read is also the
-        existence probe — and writes once; see :meth:`_merge_parquet`."""
-        if self.fmt == "delta" and _HAS_DELTA:  # pragma: no cover
-            if not self.exists():
-                self.overwrite(source)
-                return
-            if evolve_schema:
-                self.spark.conf.set(
-                    "spark.databricks.delta.schema.autoMerge.enabled", "true"
-                )
-            cond = " AND ".join(f"old.{k} = new.{k}" for k in key_columns)
-            (
-                DeltaTable.forPath(self.spark, self.path)
-                .alias("old")
-                .merge(source.dropDuplicates().alias("new"), cond)
-                .whenMatchedUpdateAll()
-                .whenNotMatchedInsertAll()
-                .execute()
-            )
-            return
+        The target is read once — that read is also the existence probe.
+        Partitioned tables rewrite only the partitions the batch touches:
+        the merged rows of those partitions are appended in one job and
+        the files they replace are unlinked after it commits. The source
+        is persisted because the partition-value collect and the write
+        both consume it. Unpartitioned tables replace every file.
+        """
         target = self._read_existing()
         if target is None:
             self.overwrite(source)
             return
-        self._merge_parquet(
-            target, source.dropDuplicates(), key_columns, evolve_schema=evolve_schema
-        )
-
-    def _merge_parquet(
-        self,
-        target: DataFrame,
-        source: DataFrame,
-        key_columns: list[str],
-        *,
-        evolve_schema: bool = False,
-    ) -> None:
-        """Upsert ``source`` into ``target``, this table as already read.
-
-        Partitioned tables rewrite only the partitions the batch touches,
-        in ONE write straight onto the table path: the merged rows of
-        those partitions, shuffled by the partition columns (the
-        :meth:`overwrite` file policy), under a dynamic partition
-        overwrite. The job reads the partitions it replaces, which is
-        safe because Spark writes them under ``.spark-staging-*`` and
-        swaps them in only at job commit, after every task has read its
-        input; a failed job leaves the table as it was. The source is
-        persisted because the partition-value collect and the write both
-        consume it.
-
-        Unpartitioned tables are rewritten whole by a static overwrite,
-        which needs the staged copy of :meth:`_checkpointed_overwrite`.
-        """
+        source = source.dropDuplicates()
         if not self.partition_columns:
-            self._checkpointed_overwrite(
+            self._replace(
                 merge_upsert(target, source, key_columns, evolve_schema=evolve_schema)
             )
             return
@@ -313,38 +315,9 @@ class StageTable:
             merged = merge_upsert(
                 target.filter(pred), source, key_columns, evolve_schema=evolve_schema
             )
-            self._write(merged, partitionOverwriteMode="dynamic")
+            self._replace(merged, _touched_partitions)
         finally:
             source.unpersist()
-
-    def _checkpointed_overwrite(self, df: DataFrame) -> None:
-        """Statically overwrite the table with a result that reads from it.
-
-        A static overwrite deletes the table's files before its job runs,
-        so a job reading the table would lose its input (and the table
-        its data). The result is therefore staged in a sibling temp dir
-        first, then re-read and written onto the table path: two
-        sequential jobs. The mode is set to static explicitly, whatever
-        the session default, so partitions the result no longer holds
-        disappear. Only the partitioned MERGE, a dynamic overwrite, writes
-        once (:meth:`_merge_parquet`); with Delta installed the MERGE path
-        replaces this entirely.
-        """
-        tmp = f"{self.path}__tmp_{uuid.uuid4().hex[:8]}"
-        try:
-            (df.write.format(self.fmt).mode("overwrite").save(tmp))
-            staged = self.spark.read.format(self.fmt).load(tmp)
-            writer = (
-                staged.write.format(self.fmt)
-                .mode("overwrite")
-                .option("partitionOverwriteMode", "static")
-            )
-            if self.partition_columns:
-                writer = writer.partitionBy(*self.partition_columns)
-            writer.save(self.path)
-            self._refresh_bloom_index()
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
 
     # -- change-feed apply (CDC with deletes) --------------------------------
 
@@ -365,40 +338,13 @@ class StageTable:
         gap. Feed metadata columns (op, seq) are stripped before the
         upsert so the stage schema stays payload-only.
 
-        Parquet path: one in-batch dedup window, one MERGE, then
-        :meth:`delete_keys` for the deletes (bloom-bounded when the key
-        is indexed). With Delta installed this is a single ``MERGE``
-        with ``whenMatchedDelete`` — same semantics, one commit.
+        One in-batch dedup window, one MERGE, then :meth:`delete_keys`
+        for the deletes (bloom-bounded when the key is indexed).
 
         Returns the delete-path file-rewrite count (:meth:`delete_keys`),
         0 when the feed had no deletes, -1 when the full table was
-        rewritten or the Delta MERGE handled it in-log."""
+        rewritten."""
         latest = dedup_latest(feed, key_columns, [seq_column])
-        if self.fmt == "delta" and _HAS_DELTA:  # pragma: no cover
-            if evolve_schema:
-                self.spark.conf.set(
-                    "spark.databricks.delta.schema.autoMerge.enabled", "true"
-                )
-            cond = " AND ".join(f"old.{k} = new.{k}" for k in key_columns)
-            payload = [
-                c for c in latest.columns if c not in (op_column, seq_column)
-            ]
-            (
-                DeltaTable.forPath(self.spark, self.path)
-                .alias("old")
-                .merge(latest.alias("new"), cond)
-                .whenMatchedDelete(condition=f"new.{op_column} = 'D'")
-                .whenMatchedUpdate(
-                    condition=f"new.{op_column} <> 'D'",
-                    set={c: f"new.{c}" for c in payload},
-                )
-                .whenNotMatchedInsert(
-                    condition=f"new.{op_column} <> 'D'",
-                    values={c: f"new.{c}" for c in payload},
-                )
-                .execute()
-            )
-            return -1
         # the feed plan (often a corpus join upstream) is consumed by the
         # op-presence probe, the merge, and the delete — persist the
         # batch-scale deduped feed so it computes ONCE. The presence of
@@ -438,13 +384,12 @@ class StageTable:
         scale soft spot: the previous path rewrote the whole table).
         Untouched files keep their index rows; rewritten files get fresh
         ones (incremental index maintenance, no full rebuild). Composite
-        or un-indexed keys fall back to the full anti-join rewrite; with
-        Delta installed the MERGE path above replaces both."""
+        or un-indexed keys fall back to the full anti-join rewrite, which
+        replaces every file, so partitions left without rows disappear."""
         if len(key_columns) == 1 and key_columns[0] in self.bloom_index_keys:
             return self._bloom_bounded_delete(deletes, key_columns[0])
         # AQE picks broadcast for the (typically tiny) delete set
-        kept = self.read().join(deletes, key_columns, "left_anti")
-        self._checkpointed_overwrite(kept)
+        self._replace(self.read().join(deletes, key_columns, "left_anti"))
         return -1
 
     @staticmethod
@@ -471,54 +416,19 @@ class StageTable:
             .parquet(*files)
             .join(F.broadcast(keys_df), [key], "left_anti")
         )
-        tmp = f"{self.path}__tmp_{uuid.uuid4().hex[:8]}"
-        new_files: list[str] = []
-        try:
-            w = kept.write.format("parquet").mode("overwrite")
-            if self.partition_columns:
-                w = w.partitionBy(*self.partition_columns)
-            w.save(tmp)
-            # splice: move rewritten part files into place (unique names —
-            # Spark part files embed a job UUID), then unlink the old
-            # candidates. Not transactional — Delta's MERGE is the
-            # transactional twin; parquet readers racing this see either
-            # file set, never a torn file.
-            for root, _dirs, fnames in os.walk(tmp):
-                for fn in fnames:
-                    if not fn.endswith(".parquet"):
-                        continue
-                    rel = os.path.relpath(root, tmp)
-                    dest_dir = (
-                        self.path
-                        if rel == "."
-                        else os.path.join(self.path, rel)
-                    )
-                    os.makedirs(dest_dir, exist_ok=True)
-                    os.rename(os.path.join(root, fn), os.path.join(dest_dir, fn))
-                    crc = os.path.join(root, f".{fn}.crc")
-                    if os.path.exists(crc):
-                        os.rename(crc, os.path.join(dest_dir, f".{fn}.crc"))
-                    new_files.append(os.path.join(dest_dir, fn))
-            for f in files:
-                local = self._local_path(f)
-                if os.path.exists(local):
-                    os.remove(local)
-                crc = os.path.join(
-                    os.path.dirname(local), f".{os.path.basename(local)}.crc"
-                )
-                if os.path.exists(crc):
-                    os.remove(crc)
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
-        self._splice_bloom_index(removed=files, added=new_files)
+        candidates = {self._local_path(f) for f in files}
+        added = _replace_files(
+            kept, self.path, self.partition_columns, lambda _before, _added: candidates
+        )
+        self._splice_bloom_index(removed=files, added=sorted(added))
         return len(files)
 
     def _splice_bloom_index(
         self, *, removed: list[str], added: list[str]
     ) -> None:
-        """Incremental index maintenance after a file splice: drop the
-        rows of removed files, build rows for the added files only (one
-        scan of the NEW files, not the table), union, swap."""
+        """Incremental index maintenance after a candidate-file rewrite:
+        drop the rows of removed files, build rows for the added files
+        only (one scan of the NEW files, not the table), union, replace."""
         from cdk_datalake_ingest_upeu_spark.sources.file_index import (
             build_file_bloom_index,
         )
@@ -537,30 +447,22 @@ class StageTable:
                     n_hashes=int(params.n_hashes),
                 )
                 kept = kept.unionByName(fresh)
-            tmp = f"{idx_path}__tmp_{uuid.uuid4().hex[:8]}"
-            try:
-                kept.write.mode("overwrite").parquet(tmp)
-                self.spark.read.parquet(tmp).write.mode("overwrite").parquet(
-                    idx_path
-                )
-            finally:
-                shutil.rmtree(tmp, ignore_errors=True)
+            _replace_files(kept, idx_path, [], _every_file)
 
     # -- maintenance ---------------------------------------------------------
 
     def optimize(self, target_partitions: int | None = None) -> None:
         """Small-file compaction — the reference's OPTIMIZE analog
-        (``light_transform.py:1394-1409``). Delta: real OPTIMIZE+VACUUM."""
-        if self.fmt == "delta" and _HAS_DELTA:  # pragma: no cover
-            self.spark.sql(f"OPTIMIZE delta.`{self.path}`")
-            DeltaTable.forPath(self.spark, self.path).vacuum(168)
-            return
+        (``light_transform.py:1394-1409``). An unpartitioned table is
+        rewritten as ``target_partitions`` files (default: a quarter of
+        its current file count); a partitioned table gets one file per
+        partition value."""
         df = self.read()
         # 4:1 bin-packing sized from the scan's INPUT FILE count —
         # driver-side metadata, never a df.rdd materialization of the
         # analyzed plan just to read a partition count
         n = target_partitions or max(1, len(df.inputFiles()) // 4)
-        self._checkpointed_overwrite(df.coalesce(n))
+        self._replace(df.coalesce(n))
 
     def drop_partitions(self, column: str, *, before: str) -> int:
         """Partition-level retention (TTL): remove every partition of
@@ -572,20 +474,13 @@ class StageTable:
         table (a filtered rewrite would scan everything to delete 1%).
         Values compare as their directory strings, so ISO dates and
         zero-padded numerics order correctly. Returns the number of
-        partitions dropped. With Delta this is
-        ``DELETE WHERE column < before`` + VACUUM (file-level under the
-        same transaction log).
+        partitions dropped.
         """
         if column not in self.partition_columns:
             raise ValueError(
                 f"{column!r} is not a partition column of this table "
                 f"(partitioned by {self.partition_columns})"
             )
-        if self.fmt == "delta" and _HAS_DELTA:  # pragma: no cover
-            self.spark.sql(
-                f"DELETE FROM delta.`{self.path}` WHERE {column} < '{before}'"
-            )
-            return -1  # Delta tracks removal in the log, not dir counts
         prefix = f"{column}="
         dropped = 0
         for name in sorted(os.listdir(self.path)):
@@ -604,6 +499,6 @@ class StageTable:
         """Catalog registration — replaces the Glue crawler (reference S14,
         ``crawler_stage.py:393-479``)."""
         self.spark.sql(
-            f"CREATE TABLE IF NOT EXISTS {table_name} USING {self.fmt.upper()} "
+            f"CREATE TABLE IF NOT EXISTS {table_name} USING PARQUET "
             f"LOCATION '{self.path}'"
         )

@@ -18,11 +18,19 @@ keyed ``project#table#column``, preserving:
 The journal is tiny driver-side state (one record per table+column), so
 a JSON file is appropriate at any data scale; swap the backend for a
 Delta table or DynamoDB by reimplementing ``_load``/``_save``.
+
+Every read-modify-write (``begin``/``confirm``/``rollback``/``reset``)
+holds an exclusive ``flock`` on the sidecar ``<path>.lock``, so tables
+that share one journal, in threads or in processes, never lose each
+other's updates. Reads take no lock: ``_save`` replaces the journal
+atomically.
 """
 
 from __future__ import annotations
 
+import contextlib
 import datetime as dt
+import fcntl
 import json
 import os
 import tempfile
@@ -67,9 +75,15 @@ class WatermarkStore:
         with open(self.path, encoding="utf-8") as fh:
             return json.load(fh)
 
+    @contextlib.contextmanager
+    def _locked(self):
+        os.makedirs(os.path.dirname(self.path) or ".", exist_ok=True)
+        with open(self.path + ".lock", "a") as fh:
+            fcntl.flock(fh, fcntl.LOCK_EX)
+            yield
+
     def _save(self, data: dict) -> None:
         directory = os.path.dirname(self.path) or "."
-        os.makedirs(directory, exist_ok=True)
         fd, tmp = tempfile.mkstemp(dir=directory, suffix=".wm")
         try:
             with os.fdopen(fd, "w", encoding="utf-8") as fh:
@@ -96,46 +110,50 @@ class WatermarkStore:
 
     def begin(self, table: str, column: str, value) -> None:
         """Record the new high-water mark as PENDING."""
-        data = self._load()
-        key = self._key(table, column)
-        prev = data.get(key)
-        prev_confirmed = None
-        if prev:
-            prev_confirmed = prev if prev.get("status") == "CONFIRMED" else prev.get("previous")
-            if prev_confirmed:
-                prev_confirmed = {
-                    "status": "CONFIRMED",
-                    "value": prev_confirmed["value"],
-                    "updated_at": prev_confirmed.get("updated_at"),
-                }
-        data[key] = {
-            "status": "PENDING",
-            "value": _encode(value),
-            "updated_at": dt.datetime.now(dt.timezone.utc).isoformat(),
-            "previous": prev_confirmed,
-        }
-        self._save(data)
+        with self._locked():
+            data = self._load()
+            key = self._key(table, column)
+            prev = data.get(key)
+            prev_confirmed = None
+            if prev:
+                prev_confirmed = prev if prev.get("status") == "CONFIRMED" else prev.get("previous")
+                if prev_confirmed:
+                    prev_confirmed = {
+                        "status": "CONFIRMED",
+                        "value": prev_confirmed["value"],
+                        "updated_at": prev_confirmed.get("updated_at"),
+                    }
+            data[key] = {
+                "status": "PENDING",
+                "value": _encode(value),
+                "updated_at": dt.datetime.now(dt.timezone.utc).isoformat(),
+                "previous": prev_confirmed,
+            }
+            self._save(data)
 
     def confirm(self, table: str, column: str) -> None:
-        data = self._load()
-        rec = data.get(self._key(table, column))
-        if rec and rec.get("status") == "PENDING":
-            rec["status"] = "CONFIRMED"
-            self._save(data)
+        with self._locked():
+            data = self._load()
+            rec = data.get(self._key(table, column))
+            if rec and rec.get("status") == "PENDING":
+                rec["status"] = "CONFIRMED"
+                self._save(data)
 
     def rollback(self, table: str, column: str) -> None:
-        data = self._load()
-        key = self._key(table, column)
-        rec = data.get(key)
-        if rec and rec.get("status") == "PENDING":
-            if rec.get("previous"):
-                data[key] = rec["previous"]
-            else:
-                del data[key]
-            self._save(data)
+        with self._locked():
+            data = self._load()
+            key = self._key(table, column)
+            rec = data.get(key)
+            if rec and rec.get("status") == "PENDING":
+                if rec.get("previous"):
+                    data[key] = rec["previous"]
+                else:
+                    del data[key]
+                self._save(data)
 
     def reset(self, table: str, column: str) -> None:
         """Delete the watermark (RESET load mode, ``load_mode.py:4-26``)."""
-        data = self._load()
-        data.pop(self._key(table, column), None)
-        self._save(data)
+        with self._locked():
+            data = self._load()
+            data.pop(self._key(table, column), None)
+            self._save(data)

@@ -299,8 +299,7 @@ def stream_rollup_maintenance(
     state forever; the additive-merge form keeps state ON DISK in the
     rollup artifact itself and each refresh costs the new batch plus a
     rollup-sized join. Generations alternate between two directories so
-    a crash mid-write never corrupts the readable rollup (the same
-    parquet-MERGE double-buffer the stage writer uses; with Delta the
+    a crash mid-write never corrupts the readable rollup (with Delta the
     merge is one additive MERGE statement and the buffer disappears)."""
     import os
 

@@ -4073,8 +4073,7 @@ FROM scored ORDER BY event_type, day
 def stage_compaction_roundtrip(spark, sf_dir):
     """S11 as a driver-checked row: land orders as 64 deliberately-small
     files, compact to exactly 4 via ``StageTable.optimize`` (the
-    OPTIMIZE analog — with Delta installed the same call is real
-    OPTIMIZE+VACUUM), and return the post-compaction file count
+    OPTIMIZE analog), and return the post-compaction file count
     alongside the data rollup. The oracle pins n_files=4, so a
     compaction that stops coalescing (or corrupts rows) goes red —
     small-file pileup is the #1 operational decay of a streaming lake
@@ -5374,10 +5373,7 @@ def stage_forget_roundtrip(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     work = _tmpdir("sforget")
     st = StageTable(
-        # bloom indexing is parquet-only by design: pin fmt so the query
-        # also runs in delta-enabled environments (default fmt is delta)
-        spark, os.path.join(work, "tbl"), fmt="parquet",
-        bloom_index_keys=["doc_id"],
+        spark, os.path.join(work, "tbl"), bloom_index_keys=["doc_id"],
     )
     # 16 hash-partitioned files: the forget set (5 ids + exact dups)
     # can occupy at most ~10 of them, so a bounded delete MUST rewrite
@@ -5490,8 +5486,7 @@ def forget_everywhere(spark, sf_dir):
     packed = pack_documents(toks, token_budget=256, tokens_col="n_tok")
     work = _tmpdir("feverywhere")
     st = StageTable(
-        spark, os.path.join(work, "shards"), fmt="parquet",
-        bloom_index_keys=["doc_id"],
+        spark, os.path.join(work, "shards"), bloom_index_keys=["doc_id"],
     )
     st.overwrite(docs.repartition(16, "doc_id"))
     n_shard_files = sum(
@@ -10083,9 +10078,7 @@ def stage_bloom_indexed_write_lookup(spark, sf_dir):
     ev = _t(spark, sf_dir, "events")
     work = _tmpdir("sbidx")
     st = StageTable(
-        # parquet pinned: bloom indexing rejects the delta default fmt
-        spark, os.path.join(work, "tbl"), fmt="parquet",
-        bloom_index_keys=["event_id"],
+        spark, os.path.join(work, "tbl"), bloom_index_keys=["event_id"],
     )
     st.overwrite(ev.repartition(16, "event_id"))
     gen2 = ev.withColumn(

@@ -55,15 +55,15 @@ def test_stage_table_overwrite_and_merge(spark, tmp_path):
     assert stage.exists()
     assert stage.read().count() == 2
 
-    # unpartitioned: a static rewrite through the staged copy; exact
-    # duplicate source rows collapse to one
+    # unpartitioned: every file replaced; exact duplicate source rows
+    # collapse to one
     batch = spark.createDataFrame(
         [(2, "B"), (3, "C"), (3, "C")], "id int, v string"
     )
     stage.merge(batch, ["id"])
     out = sorted((r.id, r.v) for r in stage.read().collect())
     assert out == [(1, "a"), (2, "B"), (3, "C")]
-    assert os.listdir(tmp_path) == ["tbl"]  # staged copy removed
+    assert os.listdir(tmp_path) == ["tbl"]  # no staged copy
 
 
 def test_stage_table_partitioned_merge_rewrites_only_touched(spark, tmp_path):
@@ -146,9 +146,9 @@ def test_merge_propagates_read_errors_and_keeps_table(spark, tmp_path, monkeypat
 
 
 def test_delete_keys_drops_emptied_partitions(spark, tmp_path):
-    """The full-table delete rewrite is a static overwrite even when the
-    session defaults to dynamic: a partition whose every row is deleted
-    disappears instead of keeping its old files."""
+    """The full-table delete rewrite replaces every file of the table,
+    whatever the session's partition-overwrite default: a partition whose
+    every row is deleted disappears instead of keeping its old files."""
     assert spark.conf.get("spark.sql.sources.partitionOverwriteMode") == "dynamic"
     path = os.path.join(tmp_path, "del")
     stage = StageTable(spark, path, partition_columns=["dt"])
@@ -159,6 +159,40 @@ def test_delete_keys_drops_emptied_partitions(spark, tmp_path):
     )
     assert stage.delete_keys(spark.createDataFrame([(1,)], "id int"), ["id"]) == -1
     assert sorted(r.id for r in stage.read().collect()) == [2, 3]
+    assert not os.path.exists(os.path.join(path, "dt=d1"))
+
+
+@pytest.mark.parametrize("partition_columns", [[], ["dt"]])
+def test_failed_write_keeps_previous_table(spark, tmp_path, partition_columns):
+    """Nothing is unlinked before the write job commits: a full load or a
+    MERGE whose job fails leaves the previous table readable."""
+    path = os.path.join(tmp_path, "kept")
+    stage = StageTable(spark, path, partition_columns=partition_columns)
+    stage.overwrite(
+        spark.createDataFrame([(1, "a", "d1"), (2, "b", "d1")], "id int, v string, dt string")
+    )
+    batch = spark.createDataFrame(
+        [(2, "B", "d1"), (3, "C", "d1")], "id int, v string, dt string"
+    ).withColumn(
+        "v", F.when(F.col("id") == 3, F.raise_error(F.lit("boom"))).otherwise(F.col("v"))
+    )
+    with pytest.raises(Exception, match="boom"):
+        stage.overwrite(batch)
+    with pytest.raises(Exception, match="boom"):
+        stage.merge(batch, ["id"])
+    assert sorted(r.id for r in stage.read().collect()) == [1, 2]
+
+
+def test_full_reload_drops_partitions_the_load_lacks(spark, tmp_path):
+    """A full load replaces the table even though the session's partition
+    overwrite default is dynamic."""
+    path = os.path.join(tmp_path, "reload")
+    stage = StageTable(spark, path, partition_columns=["dt"])
+    stage.overwrite(
+        spark.createDataFrame([(1, "a", "d1"), (2, "b", "d2")], "id int, v string, dt string")
+    )
+    stage.overwrite(spark.createDataFrame([(3, "c", "d2")], "id int, v string, dt string"))
+    assert [r.id for r in stage.read().collect()] == [3]
     assert not os.path.exists(os.path.join(path, "dt=d1"))
 
 
@@ -456,8 +490,6 @@ def test_stage_table_bloom_index_maintained_by_writes(spark, tmp_path):
 
     with _pytest.raises(ValueError, match="not bloom-indexed"):
         st.lookup(keys, "v")
-    with _pytest.raises(ValueError, match="parquet-only"):
-        StageTable(spark, path, fmt="orc", bloom_index_keys=["id"])
 
 
 def test_bloom_bounded_delete_rewrites_candidate_files_only(spark, tmp_path):
@@ -470,7 +502,7 @@ def test_bloom_bounded_delete_rewrites_candidate_files_only(spark, tmp_path):
     from cdk_datalake_ingest_upeu_spark.operators.stage_writer import StageTable
 
     path = str(tmp_path / "bounded")
-    st = StageTable(spark, path, fmt="parquet", bloom_index_keys=["k"])
+    st = StageTable(spark, path, bloom_index_keys=["k"])
     df = spark.range(0, 2000).select(
         F.col("id").alias("k"), (F.col("id") * 2).alias("v")
     )

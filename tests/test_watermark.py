@@ -61,3 +61,26 @@ def test_keys_are_scoped(tmp_path):
     s.confirm("t1", "c")
     assert s.get("t2", "c") is None
     assert s.get("t1", "other") is None
+
+
+def test_concurrent_writers_keep_every_update(tmp_path):
+    """Threads sharing one journal, each on its own key: every key ends
+    CONFIRMED at its last value (no read-modify-write is lost)."""
+    import threading
+
+    s = store(tmp_path)
+    n_threads, n_calls = 4, 100
+
+    def work(i):
+        for v in range(n_calls):
+            s.begin(f"t{i}", "c", v)
+            s.confirm(f"t{i}", "c")
+
+    threads = [threading.Thread(target=work, args=(i,)) for i in range(n_threads)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    for i in range(n_threads):
+        assert s.status(f"t{i}", "c") == "CONFIRMED"
+        assert s.get(f"t{i}", "c") == n_calls - 1
