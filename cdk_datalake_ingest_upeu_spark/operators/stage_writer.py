@@ -27,11 +27,20 @@ Scale design notes (100 TB):
   incremental case — else sort-merge with AQE skew handling).
 - With partition columns declared, only the partitions present in the
   source batch are rewritten, so a micro-batch touching 1 hour of a
-  year-partitioned table rewrites 1 partition, not 100 TB. A MERGE
-  reads the target once (that read doubles as the existence probe),
-  computes the source once and writes the merged rows once.
-- The file listings walk the table on the driver: O(files) metadata,
-  no Spark job.
+  year-partitioned table rewrites 1 partition's data, not 100 TB. A
+  MERGE reads the target once (that read doubles as the existence
+  probe), computes the source once and writes the merged rows once.
+- The listings and unlinks use ``os`` on the driver, so a table lives
+  on the local filesystem (a plain path or a ``file:`` URI); other
+  schemes are refused. Going through the Hadoop FileSystem instead
+  costs JVM calls per directory and per file: ~15 ms per listing of a
+  16-file table against 0.2 ms for ``os.walk``.
+- The two listings are NOT bounded by the partitions a write touches:
+  each walks the whole table (~5 µs per file, 720 files in 4 ms on a
+  4-vCPU VM), on top of the whole-table listing Spark's own reader
+  makes. That is fine for the tables here and slow for a million-file
+  table; a log commit, or listing only the touched partition
+  directories, removes it.
 - The latest-row dedup window (reference W1) shuffles once on the ID
   keys; the subsequent MERGE join reuses the same key, so AQE's local
   shuffle reader avoids a second full exchange.
@@ -41,6 +50,7 @@ from __future__ import annotations
 
 import os
 import shutil
+from urllib.parse import unquote, urlsplit
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -56,6 +66,23 @@ def _visible(name: str) -> bool:
     ``_``-prefixed names (``_SUCCESS``, ``_temporary``, checksums) except
     a ``_``-prefixed partition directory such as ``_k=1``."""
     return not name.startswith(".") and (not name.startswith("_") or "=" in name)
+
+
+def _local_path(path: str) -> str:
+    """``path`` as a local filesystem path. The write path lists and
+    unlinks files with ``os``, so a ``file:`` URI (Spark's form of a
+    file path) is unwrapped and any other scheme is refused: ``os``
+    would list nothing under ``s3a://`` or ``hdfs://``, and every
+    replace would silently turn into an append."""
+    url = urlsplit(path)
+    if not url.scheme:
+        return path
+    if url.scheme != "file":
+        raise ValueError(
+            f"stage tables live on the local filesystem; {path!r} has "
+            f"scheme {url.scheme!r}"
+        )
+    return unquote(url.path)
 
 
 def _list_data_files(root: str) -> set[str]:
@@ -183,11 +210,13 @@ class StageTable:
         high-cardinality keys, the capability Delta file stats provide,
         kept consistent by the writer itself."""
         self.spark = spark
-        self.path = os.fspath(path)
+        self.path = _local_path(os.fspath(path))
         self.partition_columns = partition_columns or []
         self.bloom_index_keys = list(bloom_index_keys or [])
         self.bloom_index_dir = (
-            os.fspath(bloom_index_dir) if bloom_index_dir else self.path + "__bloom"
+            _local_path(os.fspath(bloom_index_dir))
+            if bloom_index_dir
+            else self.path + "__bloom"
         )
 
     # -- basic IO ----------------------------------------------------------
@@ -392,12 +421,6 @@ class StageTable:
         self._replace(self.read().join(deletes, key_columns, "left_anti"))
         return -1
 
-    @staticmethod
-    def _local_path(f: str) -> str:
-        if f.startswith("file:"):
-            return "/" + f[5:].lstrip("/")
-        return f
-
     def _bloom_bounded_delete(self, deletes: DataFrame, key: str) -> int:
         from cdk_datalake_ingest_upeu_spark.sources.file_index import (
             bloom_index_candidate_files,
@@ -411,12 +434,14 @@ class StageTable:
         files = [r.file for r in cand.select("file").distinct().collect()]
         if not files:
             return 0  # no file can hold any delete key — nothing to do
+        # the index holds URIs, percent-encoded where Spark escaped a
+        # partition value; the reader takes them as plain paths
+        candidates = {_local_path(f) for f in files}
         kept = (
             self.spark.read.option("basePath", self.path)
-            .parquet(*files)
+            .parquet(*sorted(candidates))
             .join(F.broadcast(keys_df), [key], "left_anti")
         )
-        candidates = {self._local_path(f) for f in files}
         added = _replace_files(
             kept, self.path, self.partition_columns, lambda _before, _added: candidates
         )
@@ -456,13 +481,19 @@ class StageTable:
         (``light_transform.py:1394-1409``). An unpartitioned table is
         rewritten as ``target_partitions`` files (default: a quarter of
         its current file count); a partitioned table gets one file per
-        partition value."""
+        partition value, so it takes no ``target_partitions``."""
+        if self.partition_columns and target_partitions is not None:
+            raise ValueError(
+                "target_partitions applies to unpartitioned tables; a "
+                "partitioned table is compacted to one file per partition"
+            )
         df = self.read()
-        # 4:1 bin-packing sized from the scan's INPUT FILE count —
-        # driver-side metadata, never a df.rdd materialization of the
-        # analyzed plan just to read a partition count
-        n = target_partitions or max(1, len(df.inputFiles()) // 4)
-        self._replace(df.coalesce(n))
+        if not self.partition_columns:
+            # 4:1 bin-packing sized from the scan's INPUT FILE count —
+            # driver-side metadata, never a df.rdd materialization of the
+            # analyzed plan just to read a partition count
+            df = df.coalesce(target_partitions or max(1, len(df.inputFiles()) // 4))
+        self._replace(df)
 
     def drop_partitions(self, column: str, *, before: str) -> int:
         """Partition-level retention (TTL): remove every partition of

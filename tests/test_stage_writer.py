@@ -196,6 +196,44 @@ def test_full_reload_drops_partitions_the_load_lacks(spark, tmp_path):
     assert not os.path.exists(os.path.join(path, "dt=d1"))
 
 
+@pytest.mark.parametrize("partition_columns", [[], ["dt"]])
+def test_uri_root_replaces_instead_of_appending(spark, tmp_path, partition_columns):
+    """A ``file:`` URI root is the local table it names: a reload and a
+    MERGE replace rows, they do not pile up next to the old files."""
+    local = os.path.join(tmp_path, "uri")
+    stage = StageTable(spark, "file://" + local, partition_columns=partition_columns)
+    schema = "id int, v string, dt string"
+    load = spark.createDataFrame([(1, "a", "d1"), (2, "b", "d2")], schema)
+    stage.overwrite(load)
+    stage.overwrite(load)
+    stage.merge(spark.createDataFrame([(2, "B", "d2"), (3, "c", "d2")], schema), ["id"])
+    got = sorted((r.id, r.v) for r in stage.read().collect())
+    assert got == [(1, "a"), (2, "B"), (3, "c")]
+    if partition_columns:
+        assert stage.drop_partitions("dt", before="d2") == 1
+        assert sorted(os.listdir(local)) == ["._SUCCESS.crc", "_SUCCESS", "dt=d2"]
+
+
+@pytest.mark.parametrize("where", ["path", "bloom_index_dir"])
+def test_non_local_root_is_refused(spark, tmp_path, where):
+    """Listing an ``s3a://`` root with ``os`` would find no files, so
+    every replace would append; the table refuses such a root instead."""
+    kwargs = {"path": os.path.join(tmp_path, "t"), where: "s3a://bucket/stage"}
+    with pytest.raises(ValueError, match="'s3a'"):
+        StageTable(spark, **kwargs)
+
+
+def test_bloom_bounded_delete_in_escaped_partition(spark, tmp_path):
+    """The Bloom index names files by percent-encoded URI; a partition
+    value Spark escapes in its directory name must still be found."""
+    stage = StageTable(
+        spark, os.path.join(tmp_path, "esc"), partition_columns=["dt"], bloom_index_keys=["id"]
+    )
+    stage.overwrite(spark.createDataFrame([(1, "a b:c"), (2, "a b:c"), (3, "x")], "id int, dt string"))
+    assert stage.delete_keys(spark.createDataFrame([(1,)], "id int"), ["id"]) == 1
+    assert sorted((r.id, r.dt) for r in stage.read().collect()) == [(2, "a b:c"), (3, "x")]
+
+
 def test_write_empty_preserves_schema(spark, tmp_path):
     path = os.path.join(tmp_path, "empty")
     stage = StageTable(spark, path)
@@ -215,6 +253,21 @@ def test_optimize_compacts_files(spark, tmp_path):
     n_after = len([f for f in os.listdir(path) if f.endswith(".parquet")])
     assert n_after <= 2 < n_before
     assert stage.read().count() == 1000
+
+
+def test_optimize_partitioned_table_writes_one_file_per_partition(spark, tmp_path):
+    path = os.path.join(tmp_path, "optp")
+    stage = StageTable(spark, path, partition_columns=["dt"])
+    rows = spark.range(100).selectExpr("id", "CAST(id % 2 AS STRING) AS dt")
+    # four small files per partition, as appends from outside would leave
+    rows.repartition(4).write.partitionBy("dt").parquet(path)
+    with pytest.raises(ValueError, match="target_partitions"):
+        stage.optimize(target_partitions=1)
+    stage.optimize()
+    for dt in ("0", "1"):
+        files = os.listdir(os.path.join(path, f"dt={dt}"))
+        assert len([f for f in files if f.endswith(".parquet")]) == 1
+    assert stage.read().count() == 100
 
 
 def test_register_creates_catalog_table(spark, tmp_path):
