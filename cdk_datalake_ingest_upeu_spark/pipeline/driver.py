@@ -10,6 +10,11 @@ specs; Spark actions are synchronous, so the polling layer disappears.
 (``light_transform.py:1423-1564``): read raw -> (empty? schema-only
 stage + warning) -> single-select transforms with severity thresholds ->
 latest-row dedup -> orderBy -> MERGE or overwrite -> compaction.
+It adds no count pass of its own: the empty check reads the first split
+only, ``rows_in`` is an ``Observation`` that the write's own pass over
+the batch (or a partitioned MERGE's partition-value collect) fills in,
+and ``rows_out`` sums the stage's parquet footers (driver-side, no Spark
+job).
 
 ``RunLog`` replaces the DynamoDB run-log records
 (``light_transform.py:278-339``) with a JSONL sink.
@@ -25,7 +30,8 @@ import uuid
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from cdk_datalake_ingest_upeu_spark.config.models import ColumnSpec, TableSpec
@@ -189,9 +195,8 @@ class TableProcessor:
         table = spec.stage_table_name
         stage = self.stage_table(spec, columns)
         try:
-            raw_df = raw_df.cache()
-            rows_in = raw_df.count()
-            if rows_in == 0:
+            # one job over the first split, not a full count
+            if raw_df.isEmpty():
                 # Empty source: materialize a schema-only stage table once,
                 # report WARNING (reference light_transform.py:1444-1462).
                 if not stage.exists():
@@ -202,14 +207,27 @@ class TableProcessor:
                 self.run_log.record(table=table, status=outcome.status, message=outcome.error)
                 return outcome
 
-            result = self.engine.apply(raw_df, columns)
             id_cols = [c.name for c in columns if c.is_id]
             date_cols = [c.name for c in columns if c.is_filter_date]
             order_cols = [c.name for c in columns if c.is_order_by]
 
+            # rows_in is counted by the write's own pass over the batch, at
+            # a plan node that pass runs exactly once. With a dedup, that is
+            # the raw scan below the dedup's shuffle. Without one the rows
+            # are the raw rows, and the count goes above the orderBy: the
+            # range-sampling job of a global sort re-runs the plan under it.
+            rows_seen = Observation()
+            dedups = bool(id_cols and date_cols)
+
+            def observed(df: DataFrame) -> DataFrame:
+                return df.observe(rows_seen, F.count(F.lit(1)).alias("rows"))
+
+            result = self.engine.apply(observed(raw_df) if dedups else raw_df, columns)
             final = dedup_latest(result.df, id_cols, date_cols)
             if order_cols:
                 final = final.orderBy(*order_cols)
+            if not dedups:
+                final = observed(final)
 
             # days_off joins the MERGE set deliberately: its trailing
             # NUM_DAYS window re-extracts overlapping data every run, so
@@ -226,7 +244,12 @@ class TableProcessor:
             if optimize:
                 stage.optimize()
 
-            rows_out = stage.read().count()
+            # rows_seen.get blocks until the observed plan has run. Every
+            # path that gets here ran it: the write itself, or, for a
+            # partitioned MERGE, the collect of partition values over the
+            # persisted source (which runs even when no write follows).
+            rows_in = rows_seen.get["rows"]
+            rows_out = stage.num_rows()
             status = "WARNING" if result.warnings else "SUCCESS"
             outcome = ProcessOutcome(table, status, rows_in, rows_out, len(result.warnings))
             self.run_log.record(
@@ -248,8 +271,6 @@ class TableProcessor:
                 error=f"{exc}\n{traceback.format_exc()}",
                 retryable=_is_retryable(exc),
             )
-        finally:
-            raw_df.unpersist()
 
 
 class PipelineDriver:

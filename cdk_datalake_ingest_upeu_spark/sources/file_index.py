@@ -109,27 +109,44 @@ def bloom_pruned_read(
     index: DataFrame,
     values_df: DataFrame,
     key: str,
+    *,
+    base_path: str | None = None,
 ) -> tuple[DataFrame, int, int]:
     """Point lookup through the index: returns (matching rows read from
     ONLY the surviving files, files_scanned, files_total). The exact
     ``key IN values`` filter on top makes bloom false positives cost an
     extra file read, never a wrong row. The collected file list is
     O(candidate files) — driver-safe by construction for point
-    lookups."""
+    lookups.
+
+    ``base_path`` is the root of a partitioned table: the index's URIs
+    are then opened as local paths (Spark percent-encodes escaped
+    partition values in them) under that root, so the partition
+    columns come back with the rows."""
     files_total = index.select("file").distinct().count()
     if files_total == 0:
         raise ValueError(
             "bloom_pruned_read: the index is empty (no files) — build it "
             "over a non-empty dataset before probing"
         )
+
+    def read(files):
+        if base_path is None:
+            return spark.read.parquet(*files)
+        from cdk_datalake_ingest_upeu_spark.operators.stage_writer import _local_path
+
+        return spark.read.option("basePath", base_path).parquet(
+            *[_local_path(f) for f in files]
+        )
+
     cand = bloom_index_candidate_files(index, values_df, key)
     files = [r.file for r in cand.select("file").distinct().collect()]
     if not files:
-        empty = spark.read.parquet(
-            *[r.file for r in index.select("file").distinct().limit(1).collect()]
+        empty = read(
+            [r.file for r in index.select("file").distinct().limit(1).collect()]
         ).limit(0)
         return empty, 0, files_total
-    rows = spark.read.parquet(*files).join(
+    rows = read(files).join(
         F.broadcast(values_df.select(F.col(key)).distinct()), key, "leftsemi"
     )
     return rows, len(files), files_total

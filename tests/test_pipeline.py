@@ -236,3 +236,105 @@ def test_on_alert_fires_once_per_failed_table(spark, tmp_path):
     assert by_status["good_t"] == "SUCCESS"
     assert by_status["bad_t"] == "FAILED"
     assert alerts == ["bad_t"]
+
+
+PCOLS = COLS + [ColumnSpec("dt", 4, "string", "dt", is_partition=True)]
+
+
+def parquet_raw(spark, path, rows):
+    """A raw batch read back from parquet, as the pipeline lands it."""
+    schema = "id string, name string, updated string, dt string"
+    spark.createDataFrame(rows, schema).write.parquet(str(path))
+    return spark.read.parquet(str(path))
+
+
+# three raw rows, two ids after the latest-row dedup
+BATCH = [
+    ("1", "a", "2024-01-01 00:00:00", "d1"),
+    ("1", "b", "2024-02-01 00:00:00", "d1"),
+    ("2", "c", "2024-02-01 00:00:00", "d2"),
+]
+
+
+# no filter-date column, so no dedup: the orderBy sorts the raw rows
+UNDEDUPED = [c for c in COLS if not c.is_filter_date]
+
+
+@pytest.mark.parametrize(
+    "load_type,cols,preload,optimize",
+    [
+        ("full", COLS, False, False),
+        ("full", PCOLS, False, False),
+        ("full", UNDEDUPED, False, False),
+        ("incremental", COLS, False, False),
+        ("incremental", PCOLS, True, False),
+        ("incremental", COLS, True, False),
+        ("full", COLS, False, True),
+    ],
+    ids=[
+        "overwrite",
+        "overwrite_partitioned",
+        "overwrite_sorted_without_dedup",
+        "merge_into_missing_table",
+        "merge_partitioned",
+        "merge_unpartitioned",
+        "optimize",
+    ],
+)
+def test_row_counts_match_the_stage(spark, tmp_path, load_type, cols, preload, optimize):
+    """rows_in is the raw batch's row count and rows_out the stage's,
+    in the outcome and in the run log, on every write path."""
+    import json
+
+    log_path = os.path.join(tmp_path, "log.jsonl")
+    p = TableProcessor(spark, os.path.join(tmp_path, "stage"), RunLog(log_path))
+    if preload:
+        old = parquet_raw(
+            spark,
+            tmp_path / "old",
+            [("1", "z", "2023-01-01 00:00:00", "d1"), ("5", "y", "2023-01-01 00:00:00", "d3")],
+        )
+        assert p.process_table(old, spec("full"), cols).status == "SUCCESS"
+    out = p.process_table(
+        parquet_raw(spark, tmp_path / "raw", BATCH), spec(load_type), cols, optimize=optimize
+    )
+    rows_out = p.stage_table(spec(), cols).read().count()
+    assert out.status == "SUCCESS"
+    assert (out.rows_in, out.rows_out) == (3, rows_out)
+    assert rows_out == (3 if preload or cols is UNDEDUPED else 2)
+    context = json.loads(open(log_path).read().splitlines()[-1])["CONTEXT"]
+    assert (context["rows_in"], context["rows_out"]) == (3, rows_out)
+
+
+def test_empty_batch_leaves_existing_table_alone(spark, tmp_path):
+    p = TableProcessor(spark, os.path.join(tmp_path, "stage"))
+    p.process_table(parquet_raw(spark, tmp_path / "raw", BATCH), spec("full"), PCOLS)
+    stage = p.stage_table(spec(), PCOLS)
+
+    def files():
+        return sorted(os.path.join(d, f) for d, _s, fs in os.walk(stage.path) for f in fs)
+
+    before = (files(), sorted(stage.read().collect()))
+    out = p.process_table(parquet_raw(spark, tmp_path / "empty", []), spec("full"), PCOLS)
+    assert (out.status, out.rows_in, out.rows_out) == ("WARNING", 0, 0)
+    assert (files(), sorted(stage.read().collect())) == before
+
+
+def test_process_table_reads_the_stage_at_most_once(spark, tmp_path, monkeypatch):
+    """An overwrite never reads the stage; a MERGE reads it once, for
+    its target. Neither reads it again to count rows."""
+    from cdk_datalake_ingest_upeu_spark.operators.stage_writer import StageTable
+
+    reads = []
+    orig = StageTable.read
+
+    def counting_read(self):
+        reads.append(self.path)
+        return orig(self)
+
+    monkeypatch.setattr(StageTable, "read", counting_read)
+    p = TableProcessor(spark, os.path.join(tmp_path, "stage"))
+    p.process_table(parquet_raw(spark, tmp_path / "raw", BATCH), spec("full"), COLS)
+    assert len(reads) == 0
+    p.process_table(parquet_raw(spark, tmp_path / "raw2", BATCH[:1]), spec("incremental"), COLS)
+    assert len(reads) == 1

@@ -234,6 +234,19 @@ def test_bloom_bounded_delete_in_escaped_partition(spark, tmp_path):
     assert sorted((r.id, r.dt) for r in stage.read().collect()) == [(2, "a b:c"), (3, "x")]
 
 
+def test_lookup_in_partitioned_table_returns_partition_column(spark, tmp_path):
+    """lookup opens the index's percent-encoded URIs as local files under
+    the table root, so an escaped partition value is found and every
+    hit keeps its partition column."""
+    stage = StageTable(
+        spark, os.path.join(tmp_path, "lk"), partition_columns=["dt"], bloom_index_keys=["id"]
+    )
+    stage.overwrite(spark.createDataFrame([(1, "a b:c"), (2, "x")], "id int, dt string"))
+    for key, dt in ((1, "a b:c"), (2, "x")):
+        rows, _scanned, _total = stage.lookup(spark.createDataFrame([(key,)], "id int"), "id")
+        assert [(r.id, r.dt) for r in rows.collect()] == [(key, dt)]
+
+
 def test_write_empty_preserves_schema(spark, tmp_path):
     path = os.path.join(tmp_path, "empty")
     stage = StageTable(spark, path)
