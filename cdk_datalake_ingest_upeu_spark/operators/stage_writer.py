@@ -324,22 +324,22 @@ class StageTable:
         The target is read once — that read is also the existence probe.
         Partitioned tables rewrite only the partitions the batch touches:
         the merged rows of those partitions are appended in one job and
-        the files they replace are unlinked after it commits. The source
-        is persisted because the partition-value collect and the write
-        both consume it. Unpartitioned tables replace every file.
+        the files they replace are unlinked after it commits.
+        Unpartitioned tables replace every file. The source is persisted
+        because the upsert reads it twice (the key anti-join and the
+        union) and a partitioned merge also collects its partition values.
         """
         target = self._read_existing()
         if target is None:
             self.overwrite(source)
             return
-        source = source.dropDuplicates()
-        if not self.partition_columns:
-            self._replace(
-                merge_upsert(target, source, key_columns, evolve_schema=evolve_schema)
-            )
-            return
-        source = source.persist()
+        source = source.dropDuplicates().persist()
         try:
+            if not self.partition_columns:
+                self._replace(
+                    merge_upsert(target, source, key_columns, evolve_schema=evolve_schema)
+                )
+                return
             parts = [
                 r.asDict()
                 for r in source.select(*self.partition_columns).distinct().collect()

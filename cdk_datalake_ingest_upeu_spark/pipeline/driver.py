@@ -212,10 +212,12 @@ class TableProcessor:
             order_cols = [c.name for c in columns if c.is_order_by]
 
             # rows_in is counted by the write's own pass over the batch, at
-            # a plan node that pass runs exactly once. With a dedup, that is
-            # the raw scan below the dedup's shuffle. Without one the rows
-            # are the raw rows, and the count goes above the orderBy: the
-            # range-sampling job of a global sort re-runs the plan under it.
+            # a plan node no other job of the load re-runs. With a dedup,
+            # that is the raw scan below the dedup's shuffle. Without one
+            # the rows are the raw rows, and the count goes above the
+            # orderBy: the range-sampling job of a global sort re-runs the
+            # plan under it. The count is exact unless Spark re-runs a task
+            # of that stage (stage retry, speculation), which overcounts.
             rows_seen = Observation()
             dedups = bool(id_cols and date_cols)
 

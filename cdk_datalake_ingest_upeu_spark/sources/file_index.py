@@ -27,6 +27,8 @@ sparse rows (a few hundred MB) probed as one small join — versus a
 
 from __future__ import annotations
 
+from urllib.parse import unquote
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -119,10 +121,10 @@ def bloom_pruned_read(
     O(candidate files) — driver-safe by construction for point
     lookups.
 
-    ``base_path`` is the root of a partitioned table: the index's URIs
-    are then opened as local paths (Spark percent-encodes escaped
-    partition values in them) under that root, so the partition
-    columns come back with the rows."""
+    The index stores ``_metadata.file_path`` URIs, which percent-encode
+    the directory names Spark escaped a partition value into; they are
+    decoded before the read. ``base_path`` is the root of a partitioned
+    table: pass it so the partition columns come back with the rows."""
     files_total = index.select("file").distinct().count()
     if files_total == 0:
         raise ValueError(
@@ -131,13 +133,10 @@ def bloom_pruned_read(
         )
 
     def read(files):
-        if base_path is None:
-            return spark.read.parquet(*files)
-        from cdk_datalake_ingest_upeu_spark.operators.stage_writer import _local_path
-
-        return spark.read.option("basePath", base_path).parquet(
-            *[_local_path(f) for f in files]
-        )
+        reader = spark.read
+        if base_path is not None:
+            reader = reader.option("basePath", base_path)
+        return reader.parquet(*[unquote(f) for f in files])
 
     cand = bloom_index_candidate_files(index, values_df, key)
     files = [r.file for r in cand.select("file").distinct().collect()]

@@ -227,6 +227,19 @@ def test_file_bloom_index_prunes_and_finds(spark, sf_dir, tmp_path):
     assert scanned2 <= 1  # at most a false-positive file
     assert cand.count() <= 1
 
+    # a partition value Spark escapes in its directory name: the index's
+    # percent-encoded URIs still open, and basePath keeps the column
+    esc_dir = os.path.join(str(tmp_path), "esc")
+    spark.createDataFrame([(1, "a b:c"), (2, "x")], "event_id long, dt string").write.partitionBy(
+        "dt"
+    ).parquet(esc_dir)
+    esc_index = build_file_bloom_index(spark, esc_dir, "event_id", n_bits=1 << 10)
+    one = spark.createDataFrame([(1,)], "event_id long")
+    rows3, _, _ = bloom_pruned_read(spark, esc_index, one, "event_id")
+    assert [tuple(r) for r in rows3.collect()] == [(1,)]
+    rows4, _, _ = bloom_pruned_read(spark, esc_index, one, "event_id", base_path=esc_dir)
+    assert [(r.event_id, r.dt) for r in rows4.collect()] == [(1, "a b:c")]
+
 
 def test_bloom_pruned_read_empty_index_raises(spark):
     from cdk_datalake_ingest_upeu_spark.sources.file_index import (
